@@ -304,12 +304,11 @@ def ingest_raw(
     """Ingest a raw-lines frame (from :func:`read_raw` or
     :func:`read_raw_direct`) and append all six tables to ``outdir``.
 
-    ``versioned=True`` commits each table through the manifest layer
-    (`io.versioned.vwrite`): every ingest batch becomes an atomic table
-    version, so a crashed run is invisible, concurrent readers keep a
-    consistent snapshot, and yesterday's corpus is one
-    ``vread(version=...)`` away — the reference's Delta transactional
-    append, on the parquet layout.
+    ``versioned=True`` commits each table as a date-partitioned Delta
+    table (`io.delta_log.write_delta`), the reference's own lake format:
+    every ingest batch becomes an atomic table version, so a crashed run
+    is invisible, concurrent readers keep a consistent snapshot, and
+    yesterday's corpus is one ``read_delta(version=...)`` away.
 
     One cached parse feeds six partitioned writes — the Spark shape of
     process_file + write_delta (preprocess.py:143-175). The cache is
@@ -328,10 +327,10 @@ def ingest_raw(
     events = parse_raw_lines(raw).persist(StorageLevel.MEMORY_AND_DISK)
     events.count()  # materialize once; the six jobs below read cached blocks
     if versioned:
-        from ..io.versioned import vwrite
+        from ..io.delta_log import write_delta
 
-        def _commit(df, path, mode_, _parts, _fmt):
-            vwrite(df, path, mode=mode_)
+        def _commit(df, path, mode_, parts, _fmt):
+            write_delta(df, path, mode=mode_, partition_by=parts)
     else:
         _commit = write_table
     try:

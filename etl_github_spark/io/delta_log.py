@@ -2,13 +2,13 @@
 
 The reference stores its lakehouse in Delta (preprocess.py:169-175
 `write_deltalake`, :181-186 add-action stats scan, :199-206
-OPTIMIZE/VACUUM). This environment has no delta-spark, so the engine's
-primary storage is plain Parquet with the semantics re-implemented on
-manifests (io/sink.py, io/versioned.py — SURVEY §1.4 sanctioned
-fallback). This module closes part of the remaining FORMAT gap with a
-from-scratch implementation of the published Delta transaction-log
-protocol (delta-io/delta PROTOCOL.md), scoped to the subset the
-reference actually uses:
+OPTIMIZE/VACUUM). This environment has no delta-spark, so this module
+is a from-scratch implementation of the published Delta transaction-log
+protocol (delta-io/delta PROTOCOL.md), and it is the engine's ONE
+versioned-table format: time travel, atomic concurrent commits, stats
+skipping and snapshot diffs live here, while io/sink.py keeps only the
+plain-Parquet hot path. It is scoped to the subset the reference
+actually uses:
 
 * ``_delta_log/<20-digit version>.json`` commits containing
   ``protocol`` / ``metaData`` / ``add`` / ``remove`` actions

@@ -12,7 +12,8 @@ nprobe, not corpus size.
 
 Index metadata is the k×dim centroid matrix (see
 `queries.scale_paths.lloyd_fit`), stored beside the data as JSON — the
-same "stats sidecar" pattern as `sink.analyze_table`.
+same metadata-beside-data sidecar pattern as `io.matview`'s
+``_view_meta.json``.
 """
 
 from __future__ import annotations

@@ -8,8 +8,8 @@ view — refresh cost is O(|delta| + |view|), independent of table size.
 That is the at-scale contract: an hourly refresh over a 100 TB table
 touches one hour of data plus a keys-sized view.
 
-Consumed partitions are tracked in a ``_view_meta.json`` sidecar (the
-same pattern as `sink.analyze_table`'s stats manifest). The view swap
+Consumed partitions are tracked in a ``_view_meta.json`` sidecar
+beside the view (underscore prefix: invisible to Spark scans). The view swap
 is two-phase rename (write aside, swap, reap) — a crashed refresh
 leaves the previous view intact. Append-only contract: rewritten or
 deleted history is NOT detected (the same assumption the high-water

@@ -119,17 +119,18 @@ def pipeline_index_freshness(spark, sf_dir):
 
     docs = par(T(spark, sf_dir, "documents"))
     # Load (and tune() for) BOTH source tables on the MAIN thread before
-    # any pool work: T() applies the idempotent RUNTIME_CONF set via
-    # spark.conf.set, and issuing those from a pool thread would race
-    # the other half's planning (ADVICE r13) — after this line neither
-    # half touches session conf.
+    # any pool work, so the session conf is fully set before either
+    # half plans. The IVF-PQ half still re-enters tune() from its pool
+    # thread (via _ivfpq_base_fit -> T()), but every value it writes is
+    # the identical RUNTIME_CONF value already in place, so the other
+    # half's planning never observes a change.
     T(spark, sf_dir, "embeddings")
     lsh_path = tempfile.mkdtemp(prefix="fresh_lsh_")
     ann_path = tempfile.mkdtemp(prefix="fresh_ann_")
 
     # The two index lifecycles are INDEPENDENT (different source tables,
     # different store roots, and — with the pre-load above — no session
-    # conf mutation on either path). Running them as two concurrent
+    # conf CHANGE on either path). Running them as two concurrent
     # driver-submitted job chains (guide §2.6 "overlap independent
     # jobs") lets each half's serial driver work (sidecar writes,
     # collects, fit-round combines) back-fill the other's idle

@@ -1,6 +1,6 @@
 """Lakehouse-machinery exercises as oracle-checked queries.
 
-The storage layer (versioned manifests, incremental views) is pytest-
+The storage layer (the Delta log, incremental views) is pytest-
 verified where DuckDB can't express the behavior — but its OUTPUTS are
 plain deterministic aggregates, so these queries run a full write →
 maintain → read cycle in a scratch dir and return results an oracle
@@ -46,18 +46,19 @@ def lake_versioned_timetravel(spark, sf_dir):
     """Transactional append + time travel, driver-checked end to end:
     commit the even-id half of events as table version 1, append the
     odd-id half as version 2, then read BOTH versions back through the
-    manifest layer. The returned (version, n_rows) pairs must equal
-    what the oracle derives from the fixture alone — so a broken
-    commit, a torn manifest, or a time-travel read that leaks the other
-    version's files all fail the hash compare.
+    Delta log. ``version`` is the 1-based commit number (Delta version
+    + 1). The returned (version, n_rows) pairs must equal what the
+    oracle derives from the fixture alone — so a broken commit, a torn
+    log, or a time-travel read that leaks the other version's files all
+    fail the hash compare.
     """
-    from ..io.versioned import vread, vwrite
+    from ..io.delta_log import read_delta, write_delta
 
     e = T(spark, sf_dir, "events").select("event_id")
     path = _scratch("vtt")
-    vwrite(e.where(F.col("event_id") % 2 == 0), path)
-    vwrite(e.where(F.col("event_id") % 2 == 1), path, mode="append")
-    rows = [(1, vread(spark, path, 1).count()), (2, vread(spark, path, 2).count())]
+    write_delta(e.where(F.col("event_id") % 2 == 0), path)
+    write_delta(e.where(F.col("event_id") % 2 == 1), path, mode="append")
+    rows = [(v + 1, read_delta(spark, path, version=v).count()) for v in (0, 1)]
     shutil.rmtree(path, ignore_errors=True)
     return spark.createDataFrame(rows, "version int, n_rows long")
 

@@ -200,23 +200,27 @@ def test_direct_stream_read_plain_text_and_open_failure(spark, tmp_path):
 
 
 def test_versioned_ingest_time_travels(spark, tmp_path):
-    """versioned=True turns each ingest batch into an atomic table
-    version: after two ingests, version 1 still reads the first batch's
-    rows while head reads both."""
+    """versioned=True writes all six tables as date-partitioned Delta
+    tables and turns each ingest batch into an atomic table version:
+    after two ingests, version 0 still reads the first batch's rows
+    while head reads both."""
     from etl_github_spark.gha.pipeline import ingest_raw, read_raw
-    from etl_github_spark.io.versioned import latest_version, vread
+    from etl_github_spark.io.delta_log import history, partition_columns, read_delta
 
     src = write_fixture(tmp_path / "src", gz=True)
     lake = str(tmp_path / "lake")
     raw = read_raw(spark, [str(p) for p in src])
     out = ingest_raw(spark, raw, lake, versioned=True)
-    n1 = vread(spark, out["watch"]).count()
+    assert len(out) == 6
+    for path in out.values():
+        assert partition_columns(path) == ["date"]
+    n1 = read_delta(spark, out["watch"]).count()
     assert n1 == 7
 
     ingest_raw(spark, raw, lake, versioned=True)
-    assert latest_version(out["watch"]) == 2
-    assert vread(spark, out["watch"]).count() == 2 * n1   # head
-    assert vread(spark, out["watch"], 1).count() == n1    # time travel
+    assert [h["version"] for h in history(out["watch"])] == [0, 1]
+    assert read_delta(spark, out["watch"]).count() == 2 * n1   # head
+    assert read_delta(spark, out["watch"], version=0).count() == n1  # time travel
 
 
 def test_fetch_to_landing_failure_raises(spark, tmp_path):

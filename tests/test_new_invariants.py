@@ -655,6 +655,27 @@ def test_rotation_window_matches_generator():
     assert list(q.QUERIES)[: len(window)] == window
 
 
+def test_query_index_matches_registry():
+    """QUERIES.md is generated from the registry's names, tags, oracle
+    flags and first docstring lines — a registry edit without a rerun of
+    tools_gen_query_index.py would leave the committed index stale."""
+    import importlib.util
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "..")
+    spec = importlib.util.spec_from_file_location(
+        "tools_gen_query_index", os.path.join(root, "tools_gen_query_index.py")
+    )
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+
+    with open(os.path.join(root, "QUERIES.md")) as fh:
+        committed = fh.read()
+    assert committed == tool.render(), (
+        "QUERIES.md is stale — regenerate with `python tools_gen_query_index.py`"
+    )
+
+
 def test_bench_names_are_registered():
     """Every bench HEADLINE/EXTENDED name must exist in the registry — a
     typo or a renamed query would otherwise surface only as a silent

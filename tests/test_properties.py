@@ -384,6 +384,23 @@ def test_heavy_hitters_invariant_under_adversarial_partitioning(spark):
     assert truth, "fixture must contain at least one heavy hitter"
 
 
+def test_enc_node_rejects_keys_outside_envelope(spark):
+    """`_enc_node` is exact only for keys in [0, 10^12): inside it the
+    int64 label decodes back to the node string, and a 13-digit or
+    negative key fails the query instead of corrupting label order."""
+    import pytest
+
+    from etl_github_spark.queries.graph import _dec_node, _enc_node
+
+    ok = spark.createDataFrame([(7,), (10,), (999_999_999_999,)], "k long")
+    got = [r[0] for r in ok.select(_dec_node(_enc_node("k", 1))).collect()]
+    assert got == ["S7", "S10", "S999999999999"]
+    for bad in (1_000_000_000_000, -1):
+        df = spark.createDataFrame([(bad,)], "k long")
+        with pytest.raises(Exception, match="outside"):
+            df.select(_enc_node("k", 0)).collect()
+
+
 def test_pagerank_mass_conserved_within_integer_dust(spark):
     """Integer PageRank distributes a fixed mass of 1e12: every round
     loses only integer-division dust (< 1 unit per node per division),

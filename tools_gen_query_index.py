@@ -6,7 +6,8 @@ operators so the inventory stays current."""
 from __future__ import annotations
 
 
-def main() -> None:
+def render() -> str:
+    """The QUERIES.md text for the current registry."""
     import etl_github_spark.queries as q
 
     lines = [
@@ -27,8 +28,14 @@ def main() -> None:
         lines.append(
             f"| {i} | `{name}` | {tags} | {'y' if d.sql else 'rows-only'} | {head} |"
         )
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    import etl_github_spark.queries as q
+
     with open("QUERIES.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
+        f.write(render())
     print(f"QUERIES.md: {len(q.QUERIES)} queries")
 
 
